@@ -14,7 +14,7 @@ Design principles (see SURVEY.md §7):
     survives as a thin compatibility API (`operators.map_reduce`);
     everything else is native Spark operators.
   * UDFs only where built-ins can't express the semantics, and then
-    Arrow-batched (pandas_udf / applyInPandas / mapInPandas).
+    Arrow-batched (pandas_udf / applyInPandas / mapInPandas / mapInArrow).
 """
 
 from simplemapreduce_spark.session import get_spark

@@ -13,20 +13,23 @@ over untyped string pairs — on Spark:
   not observable in outputs (SURVEY.md §2.1 row 3).
 * group values per key + holistic ``reduceF(key, values) -> value``
   (common_reduce.go:51-87, called once per distinct key with ALL
-  values). Here: ``applyInPandas`` over ``groupBy("key")`` — the same
-  all-values-in-memory contract. NOTE the deliberate divergence knob:
-  native Spark aggregates spill / combine partially; this compat
-  operator intentionally does not, matching the reference
-  (SURVEY.md §7.3).
+  values). Here: ``repartition(key)`` → ``sortWithinPartitions(key)``
+  → one ``mapInArrow`` call per partition that walks each run of equal
+  keys and calls ``reduce_f`` once per key with all of its values. A
+  run may span Arrow batches; only the current key's values are held.
+  Unlike Spark's native aggregates there is no map-side combine:
+  reduceF is holistic, as in the reference (SURVEY.md §7.3).
 * global lexicographic sort of string keys
   (/root/reference/src/mapreduce/master.go:112-116). Here:
-  ``orderBy("key")`` — a range-partitioned external sort.
+  ``orderBy("key")`` — a range-partitioned external sort; or
+  ``sort=False`` and let the sink sort (``sinks.write_key_value_text``).
 
-At scale: mapInPandas/applyInPandas stream Arrow batches, so the map
-side never materializes a partition in Python memory; the reduce side
-holds one key-group at a time (reference contract). For aggregates
-expressible with built-ins, callers should bypass this API — it exists
-for parity, not as the fast path.
+At scale: the map side streams Arrow batches through ``mapInPandas``,
+so a partition is never materialized in Python memory; the reduce side
+sorts in the JVM (spilling as needed) and holds one key-group at a
+time in Python (reference contract). For aggregates expressible with
+built-ins, callers should bypass this API — it exists for parity, not
+as the fast path.
 """
 
 from __future__ import annotations
@@ -34,6 +37,8 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,12 +90,42 @@ def reduce_pairs(pairs: DataFrame, reduce_f: ReduceF, n_partitions: int | None =
     ensure_package_shipped(pairs.sparkSession)
     if n_partitions is not None:
         pairs = pairs.repartition(n_partitions, "key")
+    else:
+        pairs = pairs.repartition("key")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [key], "value": [reduce_f(key, pdf["value"].tolist())]})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # Keys arrive sorted, so equal keys form one run, which may
+        # continue into the next batch. ``values`` collects the open run.
+        key, values = _NO_KEY, []
+        for batch in batches:
+            out_keys: list[str | None] = []
+            out_values: list[str | None] = []
+            runs = pc.run_end_encode(batch.column("key"))
+            batch_values = batch.column("value").to_pylist()
+            start = 0
+            for run_key, end in zip(runs.values.to_pylist(), runs.run_ends.to_pylist()):
+                if run_key != key:
+                    if key is not _NO_KEY:
+                        out_keys.append(key)
+                        out_values.append(reduce_f(key, values))
+                    key, values = run_key, []
+                values.extend(batch_values[start:end])
+                start = end
+            if out_keys:
+                yield _kv_batch(out_keys, out_values)
+        if key is not _NO_KEY:
+            yield _kv_batch([key], [reduce_f(key, values)])
 
-    return pairs.groupBy("key").applyInPandas(run, schema=KV_SCHEMA)
+    return pairs.sortWithinPartitions("key").mapInArrow(run, schema=KV_SCHEMA)
+
+
+_NO_KEY = object()
+
+
+def _kv_batch(keys: list, values: list) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(keys, pa.string()), pa.array(values, pa.string())], names=["key", "value"]
+    )
 
 
 def map_reduce(

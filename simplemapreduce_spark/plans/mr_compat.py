@@ -98,8 +98,8 @@ def mr_key_value_render(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_text_whole_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole-file input contract through the gate:
     documents.text written out as a many-small-files text corpus, read
-    back as exact ``(filename, contents)`` pairs via wholeTextFiles
-    (common_map.go:66-71 — one map task per file), then word-counted.
+    back as exact ``(filename, contents)`` pairs by the whole-text file
+    scan (common_map.go:66-71 — one row per file), then word-counted.
     The count equals the direct word count over documents, so the
     round-trip + whole-file scan is value-checked, not just smoke-run."""
     from simplemapreduce_spark.sources.text import read_whole_files

@@ -5,10 +5,12 @@ key-sorted ``"<key>: <value>"`` lines
 (/root/reference/src/mapreduce/master.go:112-127; format string at
 :124). ``write_key_value_text`` reproduces it byte-for-byte.
 
-Scale note: a single output file forces a 1-partition final stage, as
-does the reference's single-process merge. That is inherent to the
-artifact, not a Spark limitation — pass ``single_file=False`` to keep
-the sort distributed across range-partitioned part files whose
+Scale note: the single output file is written by one task, as the
+reference's merge is one process. With ``single_file=True`` every row
+is shuffled to one partition and sorted there by Spark's external
+(spilling) sort; there is no range partitioner, so no sampling job
+re-runs the plan upstream of the sink. Pass ``single_file=False`` to
+keep the sort distributed across range-partitioned part files whose
 concatenation in filename order is globally sorted.
 """
 
@@ -31,10 +33,11 @@ def write_key_value_text(
     single_file: bool = True,
 ) -> None:
     """Sorted ``key: value`` text sink (the reference's merge())."""
-    out = format_key_value(df.orderBy(F.col(key).asc()), key, value)
     if single_file:
-        out = out.coalesce(1)
-    out.write.mode("overwrite").text(path)
+        ordered = df.repartition(1).sortWithinPartitions(F.col(key).asc())
+    else:
+        ordered = df.orderBy(F.col(key).asc())
+    format_key_value(ordered, key, value).write.mode("overwrite").text(path)
 
 
 def write_json_pairs(df: DataFrame, path: str) -> None:

@@ -145,3 +145,67 @@ def test_flagship_final_artifact_bytes(spark, sf_dir, tmp_path):
     with open(parts[0], "rb") as f:
         got = f.read()
     assert got == expected
+
+
+def _last_sql_plan(spark) -> str:
+    """Final (AQE) physical plan of the latest SQL execution."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    last = max(
+        (executions.apply(i) for i in range(executions.size())), key=lambda e: e.executionId()
+    )
+    return last.physicalPlanDescription()
+
+
+def _keyed_rows(spark):
+    # 300 keys out of order (sorted by their reversed spelling), plus a
+    # null key, which sorts first.
+    keys = sorted((f"k{i:03d}" for i in range(300)), key=lambda k: k[::-1])
+    rows = [(k, "v") for k in keys] + [(None, "n")]
+    return spark.createDataFrame(rows, "key string, value string").repartition(4)
+
+
+_SORTED_LINES = ["null: n"] + [f"k{i:03d}: v" for i in range(300)]
+
+
+def test_single_file_sink_sorts_on_one_task_without_range_sort(spark, tmp_path):
+    """single_file=True: one part file, sorted, written after a shuffle
+    to one partition; no range partitioner, so no sampling job that
+    would re-run the plan upstream of the sink."""
+    import glob as _glob
+
+    from simplemapreduce_spark.sinks import write_key_value_text
+
+    out = str(tmp_path / "single")
+    write_key_value_text(_keyed_rows(spark), out)
+    plan = _last_sql_plan(spark)
+    assert "rangepartitioning" not in plan
+    assert "SinglePartition" in plan
+    [part] = _glob.glob(os.path.join(out, "part-*"))
+    with open(part) as f:
+        lines = f.read().splitlines()
+    assert lines == _SORTED_LINES
+
+
+def test_distributed_sink_part_files_concatenate_sorted(spark, tmp_path):
+    """single_file=False: a range-partitioned sort over several part
+    files whose concatenation in name order is globally sorted."""
+    import glob as _glob
+
+    from simplemapreduce_spark.sinks import write_key_value_text
+
+    out = str(tmp_path / "distributed")
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "false")  # keep the tiny input on several part files
+    try:
+        write_key_value_text(_keyed_rows(spark), out, single_file=False)
+    finally:
+        spark.conf.set(conf, saved)
+    parts = sorted(_glob.glob(os.path.join(out, "part-*")))
+    assert len(parts) >= 2
+    lines = []
+    for part in parts:
+        with open(part) as f:
+            lines += f.read().splitlines()
+    assert lines == _SORTED_LINES

@@ -10,6 +10,7 @@ value is the generator exploring corners a fixed fixture never hits
 
 from __future__ import annotations
 
+import json
 from collections import Counter
 
 from hypothesis import HealthCheck, given, settings, strategies as st
@@ -35,20 +36,44 @@ _SETTINGS = settings(
 @_SETTINGS
 def test_mr_word_count_matches_counter(spark, corpus):
     """The mapF/reduceF contract (holistic reduce over ALL values of a
-    key) must agree with a plain in-memory Counter on any corpus —
-    common_test_suite.go's Check generalized from one fixture to all."""
-    df = spark.createDataFrame([(line,) for line in corpus], ["value"])
+    key) must agree with a plain in-memory grouping on any corpus —
+    common_test_suite.go's Check generalized from one fixture to all.
+
+    reduce_f returns the values it was given, so one output row per key
+    holding that key's full multiset means it ran exactly once per key
+    with all of its values. The reduce walks sorted Arrow batches; three
+    records per batch split runs of one key across batches (every row and
+    every token also emit a null key, so that run spans batches once the
+    corpus has four rows and tokens together), and more reduce partitions
+    than distinct keys leave some partitions empty."""
+    df = spark.createDataFrame(list(enumerate(corpus)), ["id", "value"])
 
     def map_f(row):
-        for tok in row["value"].split():
-            yield tok, "1"
+        yield None, str(row["id"])
+        for i, tok in enumerate(row["value"].split()):
+            yield tok, f"{row['id']}:{i}"
+            yield None, f"{row['id']}:{i}"
 
     def reduce_f(key, values):
-        return str(sum(int(v) for v in values))
+        return json.dumps(sorted(values))
 
-    out = {r["key"]: int(r["value"]) for r in map_reduce(df, map_f, reduce_f).collect()}
-    expected = Counter(tok for line in corpus for tok in line.split())
-    assert out == dict(expected)
+    expected: dict[str | None, list[str]] = {}
+    for row_id, line in enumerate(corpus):
+        expected.setdefault(None, []).append(str(row_id))
+        for i, tok in enumerate(line.split()):
+            for k in (tok, None):
+                expected.setdefault(k, []).append(f"{row_id}:{i}")
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "3")
+    try:
+        rows = map_reduce(df, map_f, reduce_f, n_partitions=len(expected) + 3).collect()
+    finally:
+        spark.conf.set(conf, saved)
+    keys = [r["key"] for r in rows]
+    assert len(keys) == len(set(keys)), "reduce_f ran more than once for a key"
+    assert {r["key"]: json.loads(r["value"]) for r in rows} == {k: sorted(v) for k, v in expected.items()}
 
 
 @given(corpus=_corpus, n_a=st.sampled_from([1, 4]), n_b=st.sampled_from([2, 8]))

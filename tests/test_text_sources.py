@@ -14,24 +14,45 @@ from simplemapreduce_spark.sinks import write_json_pairs
 from simplemapreduce_spark.sources.text import read_lines, read_whole_files
 
 
-def _write_inputs(tmp: str, files: dict[str, str], sub: str = "text_inputs") -> str:
+def _write_inputs(tmp: str, files: dict[str, str | bytes], sub: str = "text_inputs") -> str:
     import shutil
     d = os.path.join(tmp, "smr_scratch", sub)
     shutil.rmtree(d, ignore_errors=True)
     os.makedirs(d, exist_ok=True)
     for name, contents in files.items():
-        with open(os.path.join(d, name), "w") as f:
-            f.write(contents)
+        data = contents if isinstance(contents, bytes) else contents.encode()
+        with open(os.path.join(d, name), "wb") as f:
+            f.write(data)
     return d
 
 
 def test_whole_files_preserves_filename_and_contents(spark):
+    """The exact (filename, contents) rows SparkContext.wholeTextFiles
+    returns: "file:" + the unescaped path (a space, "%20", "+" and "é"
+    in directory and file names), contents byte-exact (CRLF kept),
+    invalid UTF-8 as U+FFFD, and a zero-length file as "". Names
+    starting with "_" or "." are hidden files and are not read."""
     d = _write_inputs(
         tempfile.gettempdir(),
-        {"a.txt": "one two\nthree", "b.txt": "four"}, sub="whole_inputs"
+        {
+            "a.txt": "one two\nthree",
+            "b c.txt": "four",
+            "p%20q+r.txt": "crlf\r\nline\r\n",
+            "café.txt": b"bad \xff\xfe utf8",
+            "empty.txt": "",
+            "_SUCCESS": "",
+            ".a.txt.crc": "x",
+        },
+        sub="whole inputs %20+é",
     )
-    rows = {os.path.basename(r["filename"]): r["contents"] for r in read_whole_files(spark, d).collect()}
-    assert rows == {"a.txt": "one two\nthree", "b.txt": "four"}
+    rows = sorted(tuple(r) for r in read_whole_files(spark, d).collect())
+    assert rows == [
+        (f"file:{d}/a.txt", "one two\nthree"),
+        (f"file:{d}/b c.txt", "four"),
+        (f"file:{d}/café.txt", "bad \ufffd\ufffd utf8"),
+        (f"file:{d}/empty.txt", ""),
+        (f"file:{d}/p%20q+r.txt", "crlf\r\nline\r\n"),
+    ]
 
 
 def test_read_lines_splits_rows(spark):

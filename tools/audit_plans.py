@@ -90,7 +90,7 @@ def main() -> None:
                 set(
                     re.findall(
                         r"\b(BatchEvalPython|ArrowEvalPython|FlatMapGroupsInPandas|"
-                        r"MapInPandas|FlatMapGroupsInPandasWithState|"
+                        r"MapInPandas|MapInArrow|FlatMapGroupsInPandasWithState|"
                         r"TransformWithStateInPandas)\b",
                         plan,
                     )

@@ -35,7 +35,7 @@ def fingerprint(plan: str) -> dict:
         "broadcasts": plan.count("BroadcastExchange"),
         "joins": joins,
         "python": bool(
-            re.search(r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas|MapInPandas", plan)
+            re.search(r"ArrowEvalPython|BatchEvalPython|FlatMapGroupsInPandas|MapInPandas|MapInArrow", plan)
         ),
         "reads": reads,
     }
